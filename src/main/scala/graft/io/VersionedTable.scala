@@ -55,6 +55,7 @@ import java.nio.charset.StandardCharsets
   * version throughout.
   */
 final class VersionedTable(spark: SparkSession, root: String) {
+  import VersionedTable.{CommitKind, ManifestDelta}
   private val rootPath = new Path(root)
   private val fs = TableIO.fs(spark, rootPath)
   private val dataRoot = new Path(root, "_data")
@@ -678,7 +679,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
             Seq("file_rel"), "left_semi")
         newPairs.unionByName(accumulated)
       }
-    out.write.mode(SaveMode.Overwrite).parquet(dir.toString)
+    writeCommitData(out, Seq.empty, dir)
     val counts: Map[String, Long] = spark.read.schema(dvSchema)
       .parquet(dir.toString).groupBy("file_rel").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -718,181 +719,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * `maxFilesPerTrigger` counts the same thing). Two manifest reads,
     * O(files) set difference, no data touched; callers memoize per
     * poll loop. */
-  def addedFileCount(v: Long): Long = {
-    val toM = readManifest(v)
-    if (v == 0) toM.entries.size.toLong
-    else {
-      val prev = readManifest(v - 1).entries.map(_.relPath).toSet
-      toM.entries.count(e => !prev.contains(e.relPath)).toLong
-    }
-  }
-
-  /** One micro-batch of the streaming source
-    * ([[org.apache.spark.sql.graftbridge.VersionedStreamSource]] /
-    * `Streaming.versionedSource`): the full snapshot at `toV` when
-    * `fromV` is None (initial load), else exactly the files the range
-    * (fromV, toV] ADDED — a version of appends streams one version of
-    * files, never the table. A range that also REMOVED files
-    * (overwrite / compaction / DELETE) breaks file-to-row identity and
-    * fails loudly unless `ignoreChanges` (then: added files only,
-    * at-least-once for rewritten rows). Frames are streaming-tagged
-    * for the MicroBatchExecution plan splice. */
-  def streamBatch(fromV: Option[Long], toV: Long,
-      ignoreChanges: Boolean): DataFrame = {
-    val toM = readManifest(toV)
-    val entries = fromV match {
-      case None => toM.entries
-      case Some(f) =>
-        val fromByPath = readManifest(f).entries.map(e => e.relPath -> e).toMap
-        val fromFiles = fromByPath.keySet
-        val removed = fromFiles -- toM.entries.map(_.relPath).toSet
-        // a DV delete removes rows while keeping the file — same
-        // append-only violation as a removed file
-        val dvChanged = toM.entries.exists(e =>
-          fromByPath.get(e.relPath).exists(o =>
-            o.dvDir != e.dvDir || o.dvRows != e.dvRows))
-        if ((removed.nonEmpty || dvChanged) && !ignoreChanges) sys.error(
-          s"versions $f..$toV of $root removed ${removed.size} file(s) " +
-            (if (dvChanged) "and masked rows via deletion vectors " else "") +
-            "(overwrite/compaction/delete) — a streaming source needs " +
-            "append-only commits; set ignoreChanges=true to stream only " +
-            "added files (at-least-once for rewritten rows)")
-        toM.entries.filterNot(e => fromFiles.contains(e.relPath))
-    }
-    readFiles(toM, entries, isStreaming = true)
-  }
-
-  /** One micro-batch with PER-COMMIT delete/rewrite tolerance (Delta's
-    * `ignoreDeletes` / `skipChangeCommits` options — finer-grained
-    * than the all-or-nothing `ignoreChanges`):
-    *
-    *  - a commit that only ADDS files streams its added files, always;
-    *  - `ignoreDeletes`: a commit that only REMOVES files or only
-    *    extends DV masks (partition deletes, DV row deletes) is
-    *    admitted WITHOUT rows — deletes are tolerable without row
-    *    loss; a commit that both removes and adds (a rewrite:
-    *    UPDATE/MERGE/overwrite) still fails loudly, because silently
-    *    streaming its adds would double rewritten rows;
-    *  - `skipChangeCommits`: commits that change existing data
-    *    (remove files or extend masks) are skipped WHOLESALE — their
-    *    added files never stream either (Delta 2.4's semantics:
-    *    the stream is "new data only", rewrites are invisible).
-    *
-    * Classification is a per-version manifest walk (driver-side,
-    * O(files) set arithmetic per commit); admitted files are planned
-    * AS THEY APPEARED at their commit (their DV state then), so a
-    * file masked later in the range still streams its at-commit rows
-    * — the same at-least-once stance as `ignoreChanges`. */
-  def streamBatchSelective(fromV: Option[Long], toV: Long,
-      ignoreDeletes: Boolean, skipChangeCommits: Boolean): DataFrame = {
-    val toM = readManifest(toV)
-    val entries = fromV match {
-      case None => toM.entries // initial snapshot batch, unchanged
-      case Some(f) =>
-        var prev = readManifest(f)
-        ((f + 1) to toV).flatMap { v =>
-          val cur = readManifest(v)
-          val prevByPath = prev.entries.map(e => e.relPath -> e).toMap
-          val curPaths = cur.entries.map(_.relPath).toSet
-          val added = cur.entries
-            .filterNot(e => prevByPath.contains(e.relPath))
-          val removed = prevByPath.keySet -- curPaths
-          val masked = cur.entries.exists(e =>
-            prevByPath.get(e.relPath).exists(o =>
-              o.dvDir != e.dvDir || o.dvRows != e.dvRows))
-          prev = cur
-          if (removed.isEmpty && !masked) added // pure append
-          else if (skipChangeCommits) Seq.empty // rewrite: invisible
-          else if (ignoreDeletes && added.isEmpty) Seq.empty // pure delete
-          else sys.error(
-            s"version $v of $root is a rewrite commit (removed " +
-              s"${removed.size} file(s)" +
-              (if (masked) ", extended DV masks" else "") +
-              s", added ${added.size}) — ignoreDeletes only admits " +
-              "delete-only commits; use skipChangeCommits to skip " +
-              "rewrites wholesale, or ignoreChanges to stream their " +
-              "added files at-least-once")
-        }
-    }
-    readFiles(toM, entries, isStreaming = true)
-  }
-
-  /** One CHANGE-FEED micro-batch for (fromV, toV] — the streaming CDF
-    * source's planner (Delta `readChangeFeed` streaming): rows tagged
-    * `_change_type`, planned from manifests + DV sidecars, streaming-
-    * tagged throughout (the V1 Source contract; a row-level diff via
-    * exceptAll can't be streaming-planned, which is exactly why the
-    * feed is derived from file/mask deltas instead).
-    *
-    *  - initial batch (fromV None): the snapshot at toV as "insert"
-    *  - files ADDED in the range: their live rows as "insert" (toV's
-    *    masks applied — a row inserted and DV-deleted inside one
-    *    range collapses away, standard compacted-CDC semantics)
-    *  - DV deltas on SURVIVING files: the newly masked rows as
-    *    "delete" (a streaming scan of just those files semi-joined
-    *    against the mask delta — O(changed files + masked rows))
-    *  - a range that REMOVED files: nothing if the range's commits
-    *    are all value-preserving rewrites (OPTIMIZE* / REORG PURGE);
-    *    otherwise it fails loudly — a rewrite's row-level diff is
-    *    not derivable from manifests (that includes a DV delete that
-    *    empties a file entirely, which drops the file). Keep the
-    *    stream's lag inside the maintenance cadence, as with any
-    *    CDC reader. */
-  def streamChangeBatch(fromV: Option[Long], toV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val toM = readManifest(toV)
-    val target = logicalSchema(toM)
-    def tag(df: DataFrame, t: String): DataFrame =
-      df.select(target.fields.toSeq.map(f => col(f.name)) :+
-        lit(t).as("_change_type"): _*)
-    def emptyBatch: DataFrame =
-      tag(readFiles(toM, Seq.empty, isStreaming = true), "insert")
-        .filter(lit(false))
-    fromV match {
-      case None =>
-        tag(readFiles(toM, toM.entries, isStreaming = true), "insert")
-      case Some(f) =>
-        val fromM = readManifest(f)
-        val fromByPath = fromM.entries.map(e => e.relPath -> e).toMap
-        val toPaths = toM.entries.map(_.relPath).toSet
-        val removed = fromM.entries.filterNot(e => toPaths.contains(e.relPath))
-        if (removed.nonEmpty) {
-          val ops = history(limit = Int.MaxValue)
-            .filter(h => h.version > f && h.version <= toV)
-          val rewriteOnly = ops.size == (toV - f) && ops.forall(h =>
-            h.operation.startsWith("OPTIMIZE") ||
-              h.operation == "REORG PURGE")
-          if (!rewriteOnly) sys.error(
-            s"versions $f..$toV of $root removed ${removed.size} file(s) " +
-              "outside a pure OPTIMIZE/REORG PURGE window — the change " +
-              "feed cannot derive a row-level diff of a rewrite from " +
-              "manifests; keep the stream's lag inside the maintenance " +
-              "cadence or re-seed the stream")
-          return emptyBatch // rewrites move bytes, never rows
-        }
-        val added = toM.entries.filterNot(e => fromByPath.contains(e.relPath))
-        val inserts = tag(readFiles(toM, added, isStreaming = true), "insert")
-        val dvChangedEntries = toM.entries.filter(e =>
-          fromByPath.get(e.relPath).exists(o =>
-            o.dvDir != e.dvDir || o.dvRows != e.dvRows))
-        if (dvChangedEntries.isEmpty) inserts
-        else {
-          // a SHRUNK mask (RESTORE behind the cursor) is not an append
-          // of deletes — resurrected rows are not derivable here
-          dvChangedEntries.foreach { e =>
-            val o = fromByPath(e.relPath)
-            if (e.dvRows < o.dvRows) sys.error(
-              s"versions $f..$toV of $root shrank the deletion mask of " +
-                s"${e.relPath} (a RESTORE) — the change feed cannot " +
-                "derive resurrected rows; re-seed the stream")
-          }
-          val deleted = newlyMaskedRows(toM,
-            dvChangedEntries.map(e => e -> fromByPath(e.relPath).dvDirs),
-            isStreaming = true)
-          inserts.unionByName(tag(deleted, "delete"))
-        }
-    }
-  }
+  def addedFileCount(v: Long): Long =
+    new CommitWindow(v - 1, v).delta.added.size.toLong
 
   /** S4: newest version committed at or before `ts` (ISO-8601 instant)
     * — Delta `timestampAsOf`. Commit times come from the history files;
@@ -1538,10 +1366,9 @@ final class VersionedTable(spark: SparkSession, root: String) {
           (srcRendered(e.relPath), destRendered(absPath(e.relPath)))
         }.toDF("file_rel", "_new_rel")
         val dir = dest.newCommitDir(0L)
-        readDvRows(masked.flatMap(_.dvDirs).distinct)
+        dest.writeCommitData(readDvRows(masked.flatMap(_.dvDirs).distinct)
           .join(mapping, Seq("file_rel"))
-          .select(col("_new_rel").as("file_rel"), col("pos"))
-          .write.mode(SaveMode.Overwrite).parquet(dir.toString)
+          .select(col("_new_rel").as("file_rel"), col("pos")), Seq.empty, dir)
         Some(dest.relativize(dir))
       }
     val entries = m.entries.map { e =>
@@ -2878,6 +2705,152 @@ final class VersionedTable(spark: SparkSession, root: String) {
       m.partitionBy, files, isStreaming = false, rowMeta = true)
   }
 
+  // --------------------------------------------------------- change feed
+
+  /** The change-feed window (fromV, toV] — the ONE analysis every
+    * `changes*` / `stream*Batch*` method reads its answers from:
+    *
+    *  - `delta`: the endpoint [[VersionedTable.ManifestDelta]], from two
+    *    manifest reads. `fromV = -1` is the empty prelude before the
+    *    creating commit, so that window adds the whole `toV` snapshot;
+    *  - `opKinds`: the commit kinds each history line alone decides
+    *    (gap, RESTORE, layout), from ONE history read on first use;
+    *  - `commitDeltas` / `kinds`: each commit's own file delta (one
+    *    manifest read per commit, on first use) and its full
+    *    [[VersionedTable.CommitKind]].
+    *
+    * Inside [[sharingHistory]] the window reuses that call's read. */
+  private final class CommitWindow(val fromV: Long, val toV: Long) {
+    require(fromV >= -1 && fromV <= toV,
+      s"change-feed range is invalid at $root: $fromV..$toV")
+    val toM: VersionManifest = readManifest(toV)
+    val fromM: VersionManifest =
+      if (fromV < 0) toM.copy(entries = Seq.empty) else readManifest(fromV)
+    val delta = ManifestDelta.between(fromM.entries, toM.entries)
+    private def versions = (fromV + 1) to toV
+    private lazy val ops: Map[Long, String] =
+      sharedHistory.get.getOrElse(history(limit = Int.MaxValue))
+        .filter(h => h.version > fromV && h.version <= toV)
+        .map(h => h.version -> h.operation).toMap
+    lazy val opKinds: Seq[Option[CommitKind]] =
+      versions.map(v => CommitKind.byOperation(ops.get(v)))
+    lazy val commitDeltas: Seq[(Long, ManifestDelta)] = {
+      var prev = fromM.entries
+      versions.map { v =>
+        val cur = if (v == toV) toM.entries else readManifest(v).entries
+        val d = ManifestDelta.between(prev, cur)
+        prev = cur
+        v -> d
+      }
+    }
+    lazy val kinds: Seq[(Long, CommitKind)] =
+      commitDeltas.map { case (v, d) => v -> CommitKind(ops.get(v), d) }
+  }
+
+  // not inheritable: a pool thread born inside the scope must not keep it
+  private val sharedHistory =
+    ThreadLocal.withInitial[Option[Seq[HistoryEntry]]](() => None)
+
+  /** Runs `body` on ONE history read, shared by every change-feed
+    * window this thread plans inside it. */
+  private def sharingHistory[A](body: Seq[HistoryEntry] => A): A = {
+    val outer = sharedHistory.get
+    val h = outer.getOrElse(history(limit = Int.MaxValue))
+    sharedHistory.set(Some(h))
+    try body(h) finally sharedHistory.set(outer)
+  }
+
+  /** `df` projected onto `fields` by name, a missing column
+    * null-filled: a change-feed window may cross a schema evolution. */
+  private def alignTo(df: DataFrame,
+      fields: Seq[org.apache.spark.sql.types.StructField]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    df.select(fields.map { f =>
+      (if (df.columns.contains(f.name)) col(f.name)
+       else lit(null).cast(f.dataType)).as(f.name)
+    }: _*)
+  }
+
+  /** The change-feed planner behind [[changes]] and
+    * [[streamChangeBatch]]: rows tagged `_change_type` ("insert" /
+    * "delete") in `toV`'s logical schema, DERIVED from manifests + DV
+    * delta chains whenever the window's evidence allows —
+    * O(changed files + masked rows), never the table:
+    *
+    *  - append-only windows: the added files' live rows as inserts
+    *    (`toV`'s masks applied — a row inserted and deleted inside the
+    *    window collapses away). Reads two manifests and no history;
+    *  - pure OPTIMIZE / REORG PURGE windows: empty by construction;
+    *  - windows of appends, DV DML and pure DELETE/TRUNCATE: added files
+    *    as inserts, each surviving file's newly masked rows as deletes
+    *    (a scan of just those files semi-joined against the per-file
+    *    mask delta), and each removed file's prior live rows as deletes
+    *    — the per-commit walk runs only when the window removed files.
+    *
+    * Any other window (overwrite, RESTORE, layout mixed with row
+    * changes, a history gap) is not derivable: a batch feed falls back
+    * to the row-level symmetric diff (`exceptAll` both ways — two full
+    * scans; keep CDC cursors inside the maintenance cadence), a
+    * streaming feed fails loudly. The derived feed is IDENTITY-based
+    * (an UPDATE to the same values emits a delete + insert pair), the
+    * fallback VALUE-based (such pairs cancel); signed consumers (IVM
+    * folds) are insensitive to the difference. */
+  private def planChanges(w: CommitWindow, streaming: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    val d = w.delta
+    val target = logicalSchema(w.toM).fields.toSeq
+    def tagged(df: DataFrame, t: String): DataFrame =
+      alignTo(df, target).withColumn("_change_type", lit(t))
+    def scan(m: VersionManifest, es: Seq[ManifestEntry]): DataFrame =
+      readFiles(m, es, isStreaming = streaming)
+    def inserts = tagged(scan(w.toM, d.added), "insert")
+    if (d.appendOnly) inserts
+    else if (d.removed.nonEmpty &&
+        w.opKinds.forall(_.contains(CommitKind.Layout)))
+      tagged(scan(w.toM, Seq.empty), "insert")
+    else if (w.opKinds.forall(_.isEmpty) && d.shrunk.isEmpty &&
+        (d.removed.isEmpty ||
+          w.kinds.forall { case (_, k) => CommitKind.derivable(k) })) {
+      val survivorDeletes =
+        if (d.remasked.isEmpty) None
+        else Some(newlyMaskedRows(w.toM,
+          d.remasked.map { case (e, o) => e -> o.dvDirs }, streaming))
+      val deathDeletes =
+        if (d.removed.isEmpty) None else Some(scan(w.fromM, d.removed))
+      (inserts +: (survivorDeletes ++ deathDeletes).toSeq
+        .map(tagged(_, "delete"))).reduce(_ unionByName _)
+    } else if (streaming) sys.error(
+      s"versions ${w.fromV}..${w.toV} of $root removed " +
+        s"${d.removed.size} file(s) and shrank ${d.shrunk.size} " +
+        "deletion mask(s) outside appends, DV DML, pure deletes and pure " +
+        "OPTIMIZE/REORG PURGE windows — the change feed cannot derive a " +
+        "row-level diff of a rewrite or RESTORE from manifests; keep the " +
+        "stream's lag inside the maintenance cadence or re-seed the stream")
+    else {
+      val a = alignTo(readVersion(w.fromV), target)
+      val b = alignTo(readVersion(w.toV), target)
+      b.exceptAll(a).withColumn("_change_type", lit("insert"))
+        .unionByName(a.exceptAll(b).withColumn("_change_type", lit("delete")))
+    }
+  }
+
+  /** Change feed between two versions (Delta CDF substitute): rows
+    * added and removed going `fromV` → `toV` (`-1` = from the empty
+    * prelude), tagged `_change_type`; see [[planChanges]] for which
+    * windows derive from manifests and which fall back to a snapshot
+    * diff. */
+  def changes(fromV: Long, toV: Long): DataFrame =
+    planChanges(new CommitWindow(fromV, toV), streaming = false)
+
+  /** One CHANGE-FEED micro-batch for (fromV, toV] — the streaming CDF
+    * source's planner (Delta `readChangeFeed` streaming): the same
+    * rows as [[changes]], streaming-tagged throughout (the V1 Source
+    * contract; an exceptAll diff cannot be streaming-planned, so a
+    * window [[planChanges]] cannot derive fails instead). The initial
+    * batch (`fromV` None) is the snapshot at `toV` as inserts. */
+  def streamChangeBatch(fromV: Option[Long], toV: Long): DataFrame =
+    planChanges(new CommitWindow(fromV.getOrElse(-1L), toV), streaming = true)
+
   /** Change feed WITH UPDATE IMAGES (Delta CDF `update_preimage` /
     * `update_postimage`): row tracking pairs each from-row with its
     * to-row by `_row_id`, so a rewritten row surfaces as an update,
@@ -2886,69 +2859,43 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * identical values produces NOTHING, which the value-diffing
     * [[changes]] cannot promise. Reads ONLY the delta file sets (files
     * added/removed/re-masked between the versions), so cost is
-    * O(changed files) whatever the table size. Output: `toV`'s logical
-    * columns + `_row_id` + `_change_type`; updates emit both images
-    * under the same id. */
+    * O(changed files) whatever the table size; a pure layout window
+    * is answered from the history alone (its relPath churn would
+    * otherwise put every file in both delta sets). Output: `toV`'s
+    * logical columns + `_row_id` + `_change_type`; updates emit both
+    * images under the same id. */
   def changesWithUpdates(fromV: Long, toV: Long): DataFrame = {
     import org.apache.spark.sql.functions.{array, coalesce, col, explode,
       lit, struct, when}
-    val fromM = readManifest(fromV)
-    val toM = readManifest(toV)
+    val w = new CommitWindow(fromV, toV)
+    val (fromM, toM, d) = (w.fromM, w.toM, w.delta)
     require(fromM.rowIdHw.isDefined && toM.rowIdHw.isDefined,
       s"changesWithUpdates needs row tracking enabled at both ends of " +
         s"$root v$fromV..v$toV")
-    val fromByPath = fromM.entries.map(e => e.relPath -> e).toMap
-    val toByPath = toM.entries.map(e => e.relPath -> e).toMap
-    // REWRITE-ONLY FAST PATH: when every commit in (fromV, toV] is a
-    // value-preserving layout op (OPTIMIZE / REORG PURGE — both carry
-    // each surviving row's id and values by contract), the feed is
-    // empty BY CONSTRUCTION — answer from the history alone instead
-    // of proving emptiness with a table-sized self-join (the relPath
-    // churn otherwise puts every file in both delta sets, so an
-    // OPTIMIZE inside the window degraded the read to O(table)).
-    // The version-count guard keeps the path honest if any history
-    // line is unreadable: missing lines fall through to the diff.
-    val windowOps = history(limit = Int.MaxValue)
-      .filter(h => h.version > fromV && h.version <= toV)
-    val rewriteOnly = windowOps.size == (toV - fromV) &&
-      windowOps.forall(h =>
-        h.operation.startsWith("OPTIMIZE") || // incl. OPTIMIZE WHERE
-          h.operation == "REORG PURGE")
-    if (rewriteOnly) {
-      val fields = org.apache.spark.sql.types.StructField(
-          RowIdCol, org.apache.spark.sql.types.LongType) +:
-        logicalSchema(toM).fields :+
-        org.apache.spark.sql.types.StructField("_change_type",
-          org.apache.spark.sql.types.StringType)
+    val target = logicalSchema(toM)
+    if (!d.appendOnly && w.opKinds.forall(_.contains(CommitKind.Layout)))
       return spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StructType(fields))
-    }
-    def dvChanged(a: ManifestEntry, b: ManifestEntry) =
-      a.dvDir != b.dvDir || a.dvRows != b.dvRows
-    // a surviving file whose DV changed joins on BOTH sides: its
-    // untouched rows pair up value-equal and vanish, its newly masked
-    // rows surface as deletes (resurrected ones as inserts)
-    val fromDelta = fromM.entries.filter(e => toByPath.get(e.relPath)
-      .forall(t => dvChanged(e, t)))
-    val toDelta = toM.entries.filter(e => fromByPath.get(e.relPath)
-      .forall(f => dvChanged(e, f)))
-    val target = logicalSchema(toM)
+        StructType(org.apache.spark.sql.types.StructField(
+          RowIdCol, org.apache.spark.sql.types.LongType) +: target.fields :+
+          org.apache.spark.sql.types.StructField("_change_type",
+            org.apache.spark.sql.types.StringType)))
     def aligned(m: VersionManifest, es: Seq[ManifestEntry]): DataFrame = {
       val base =
         if (es.nonEmpty)
           logicalize(m, readFilesPhysicalRid(m, es))
             .withColumnRenamed(RowIdPhysCol, RowIdCol)
         else readVersionWithRowIds(toV).limit(0)
-      base.select((target.fields.toSeq.map { f =>
-        (if (base.columns.contains(f.name)) col(f.name)
-         else lit(null).cast(f.dataType)).as(f.name)
-      } :+ col(RowIdCol)): _*)
+      alignTo(base, target.fields.toSeq :+ org.apache.spark.sql.types
+        .StructField(RowIdCol, org.apache.spark.sql.types.LongType))
     }
+    // a surviving file whose DV changed joins on BOTH sides: its
+    // untouched rows pair up value-equal and vanish, its newly masked
+    // rows surface as deletes (resurrected ones as inserts)
     val valCols = target.fields.toSeq.map(f => col(f.name))
-    val pre = aligned(fromM, fromDelta)
+    val pre = aligned(fromM, d.removed ++ d.remasked.map(_._2))
       .select(col(RowIdCol).as("__rid_l"), struct(valCols: _*).as("_pre"))
-    val post = aligned(toM, toDelta)
+    val post = aligned(toM, d.added ++ d.remasked.map(_._1))
       .select(col(RowIdCol).as("__rid_r"), struct(valCols: _*).as("_post"))
     pre.join(post, col("__rid_l") === col("__rid_r"), "full_outer")
       // rows that only changed address (compaction/purge) are NOT
@@ -2969,335 +2916,140 @@ final class VersionedTable(spark: SparkSession, root: String) {
         col("_e.t").as("_change_type")): _*)
   }
 
-  /** Change feed between two versions (Delta CDF substitute): rows
-    * added and removed going `fromV` → `toV`, tagged `_change_type`
-    * ("insert" / "delete").
-    *
-    * The feed is DERIVED from manifests + DV delta chains whenever the
-    * window's evidence allows — O(changed files + masked rows), never
-    * the table:
-    *
-    *  - append-only windows: the files in `toV`'s manifest but not
-    *    `fromV`'s, as inserts — a day of appends on a 100 TB table
-    *    reads one day of files;
-    *  - windows whose only mutations are appends and DV DML
-    *    (DELETE/UPDATE/MERGE via deletion vectors): added files as
-    *    inserts (toV's masks applied — a row inserted and deleted
-    *    inside the window collapses away), each surviving file's
-    *    per-file chain delta as deletes, and a file the DV DML
-    *    emptied entirely (dropped from the manifest) contributes its
-    *    fromV-live rows as deletes;
-    *  - pure OPTIMIZE / REORG PURGE windows: empty by construction —
-    *    layout ops move bytes, never rows.
-    *
-    * Only genuinely non-derivable windows — true overwrites, RESTOREs
-    * (masks can shrink), OPTIMIZE mixed with DML in one window (file
-    * identity broken), or gaps in the history — fall back to the
-    * row-level symmetric diff (`exceptAll` both ways over both
-    * snapshots — two full scans; keep CDC cursors inside the
-    * maintenance cadence to stay on the derived path). Note the
-    * derived feed is IDENTITY-based (an UPDATE that rewrites a row to
-    * the same values emits a delete+insert pair), the fallback is
-    * VALUE-based (such pairs cancel); signed consumers (IVM folds)
-    * are insensitive to the difference. */
-  def changes(fromV: Long, toV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val fromM = readManifest(fromV)
-    val fromByPath = fromM.entries.map(e => e.relPath -> e).toMap
-    val fromFiles = fromByPath.keySet
-    val toManifest = readManifest(toV)
-    val added = toManifest.entries.filterNot(e => fromFiles.contains(e.relPath))
-    val removed = fromM.entries.filterNot(e =>
-      toManifest.entries.exists(_.relPath == e.relPath))
-    val dvChangedEntries = toManifest.entries.filter(e =>
-      fromByPath.get(e.relPath).exists(o =>
-        o.dvDir != e.dvDir || o.dvRows != e.dvRows))
-    if (removed.isEmpty && dvChangedEntries.isEmpty) {
-      if (added.isEmpty)
-        readVersion(toV).limit(0).withColumn("_change_type", lit("insert"))
-      else
-        readFiles(toManifest, added).withColumn("_change_type", lit("insert"))
-    } else {
-      val target = logicalSchema(toManifest)
-      def align(df: DataFrame): DataFrame =
-        df.select(target.fields.toSeq.map { f =>
-          (if (df.columns.contains(f.name)) col(f.name)
-           else lit(null).cast(f.dataType)).as(f.name)
-        } ++ (if (df.columns.contains("_change_type"))
-                Seq(col("_change_type")) else Seq.empty): _*)
-      // window evidence: every commit's history line, else fallback
-      val ops = history(limit = Int.MaxValue)
-        .filter(h => h.version > fromV && h.version <= toV)
-      val complete = ops.size == (toV - fromV)
-      def rewriteSafe(op: String) =
-        op.startsWith("OPTIMIZE") || op == "REORG PURGE"
-      if (complete && removed.nonEmpty && ops.forall(h =>
-          rewriteSafe(h.operation))) {
-        // pure layout window: empty by construction (answered from
-        // history — proving emptiness with a diff would be O(table))
-        return spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          StructType(target.fields :+
-            org.apache.spark.sql.types.StructField("_change_type",
-              org.apache.spark.sql.types.StringType)))
-      }
-      // derivable iff: history complete; no RESTORE (masks may
-      // shrink) and no layout op (file identity broken) inside a
-      // window that also mutates rows; every file REMOVAL is a DV DML
-      // death (fully-masked file dropped — its pre-window live rows
-      // are exactly the deleted rows); masks only grew
-      val derivable = complete &&
-        ops.forall(h => !rewriteSafe(h.operation) &&
-          !h.operation.startsWith("RESTORE")) &&
-        (removed.isEmpty || removalsAllDvDeaths(fromV, toV)) &&
-        dvChangedEntries.forall(e =>
-          e.dvRows >= fromByPath(e.relPath).dvRows)
-      if (derivable) {
-        val inserts = align(readFiles(toManifest, added)
-          .withColumn("_change_type", lit("insert")))
-        val survivorDeletes =
-          if (dvChangedEntries.isEmpty) None
-          else Some(align(newlyMaskedRows(toManifest,
-            dvChangedEntries.map(e => e -> fromByPath(e.relPath).dvDirs),
-            isStreaming = false)
-            .withColumn("_change_type", lit("delete"))))
-        val deathDeletes =
-          if (removed.isEmpty) None
-          else Some(align(readFiles(fromM, removed)
-            .withColumn("_change_type", lit("delete"))))
-        (Seq(inserts) ++ survivorDeletes ++ deathDeletes)
-          .reduce(_ unionByName _)
-      } else {
-        // exceptAll demands identical schemas; a range crossing a
-        // schema-evolution (or rename/drop) boundary has different
-        // column sets, so align BOTH snapshots to `toV`'s LOGICAL
-        // schema (missing columns null-filled — the same value reads
-        // of the pre-evolution files produce)
-        val a = align(readVersion(fromV))
-        val b = align(readVersion(toV))
-        b.exceptAll(a).withColumn("_change_type", lit("insert"))
-          .unionByName(
-            a.exceptAll(b).withColumn("_change_type", lit("delete")))
-      }
-    }
-  }
-
-  /** Was every file removal in (fromV, toV] a whole-file DEATH — a
-    * removal whose rows are all provably deleted, so the feed can
-    * emit the file's prior live rows as deletes? Two derivable
-    * classes, checked per commit (driver-side set arithmetic over
-    * O(window commits) small manifest reads):
-    *
-    *  - DV DML commits: [[maskedEntry]] only drops an entry when its
-    *    chain covers every row, so their removals are deaths by
-    *    construction;
-    *  - pure-removal DELETE / TRUNCATE commits (removed files, added
-    *    NONE): a delete that rewrote survivors into new files would
-    *    have added them, so zero adds proves every removed row died —
-    *    this admits metadata partition deletes and TRUNCATE.
-    *
-    * Any other removal (overwrite, RESTORE, a rewrite-delete with
-    * surviving rows) makes the window non-derivable. */
-  private def removalsAllDvDeaths(fromV: Long, toV: Long): Boolean = {
-    val opByV = history(limit = Int.MaxValue)
-      .filter(h => h.version > fromV && h.version <= toV)
-      .map(h => h.version -> h.operation).toMap
-    def dvDml(op: String) = op.startsWith("DELETE DV") ||
-      op.startsWith("UPDATE DV") || op.startsWith("MERGE DV")
-    def pureRemovalOp(op: String) = op == "TRUNCATE" ||
-      op.toUpperCase.startsWith("DELETE")
-    var prev = readManifest(fromV).entries.map(_.relPath).toSet
-    ((fromV + 1) to toV).forall { v =>
-      val cur = readManifest(v).entries.map(_.relPath).toSet
-      val removedHere = (prev -- cur).nonEmpty
-      val addedHere = (cur -- prev).nonEmpty
-      prev = cur
-      !removedHere || opByV.get(v).exists(op =>
-        dvDml(op) || (pureRemovalOp(op) && !addedHere))
-    }
-  }
-
   /** [[changes]] computed over COMMIT SPANS and unioned — the signed-
     * consumer feed (IVM folds: inserts +, deletes −; any insert-then-
     * delete pair either compacts inside a span or cancels
     * arithmetically in the fold, so both give the same folded state).
     * Commits classify individually, then MAXIMAL RUNS of derivable
-    * DML/append commits plan as ONE endpoint slice each — a 1000-
-    * commit append/DML backlog is one plan, not a 1000-way union —
-    * while layout commits (OPTIMIZE / REORG) contribute nothing and
-    * only genuinely non-derivable commits (overwrites, RESTOREs,
-    * history gaps) pay a single-commit snapshot diff. A window MIXING
-    * DML with OPTIMIZE therefore stays O(changed files + masked
-    * rows), where the plain endpoint form of [[changes]] must fall
-    * back. Driver cost: O(window commits) manifest reads. */
-  def changesPerCommit(fromV: Long, toV: Long): DataFrame = {
-    require(fromV >= 0 && fromV <= toV,
-      s"changesPerCommit range is invalid: $fromV..$toV")
-    if (fromV == toV) return changes(toV, toV)
-    val opByV = history(limit = Int.MaxValue)
-      .filter(h => h.version > fromV && h.version <= toV)
-      .map(h => h.version -> h.operation).toMap
-    def rewriteSafe(op: String) =
-      op.startsWith("OPTIMIZE") || op == "REORG PURGE"
-    def dvDml(op: String) = op.startsWith("DELETE DV") ||
-      op.startsWith("UPDATE DV") || op.startsWith("MERGE DV")
-    def pureRemovalOp(op: String) = op == "TRUNCATE" ||
-      op.toUpperCase.startsWith("DELETE")
-    // 0 = mergeable (derivable DML/append), 1 = layout (empty),
-    // 2 = other (single-commit snapshot diff)
-    var prev = readManifest(fromV)
-    val classes: Seq[(Long, Int)] = ((fromV + 1) to toV).map { v =>
-      val cur = readManifest(v)
-      val prevBy = prev.entries.map(e => e.relPath -> e).toMap
-      val curPaths = cur.entries.map(_.relPath).toSet
-      val removed = prevBy.keySet.exists(!curPaths.contains(_))
-      val added = cur.entries.exists(e => !prevBy.contains(e.relPath))
-      val dvShrunk = cur.entries.exists(e =>
-        prevBy.get(e.relPath).exists(o => e.dvRows < o.dvRows))
-      prev = cur
-      val cls = opByV.get(v) match {
-        case None => 2 // history gap: prove nothing
-        case Some(op) if op.startsWith("RESTORE") => 2
-        case Some(op) if rewriteSafe(op) => 1 // layout moves no rows
-        case Some(_) if dvShrunk => 2
-        case Some(op) if removed &&
-          !(dvDml(op) || (pureRemovalOp(op) && !added)) => 2
-        case Some(_) => 0
+    * commits plan as ONE endpoint slice each — a 1000-commit
+    * append/DML backlog is one plan, not a 1000-way union — while
+    * layout commits (OPTIMIZE / REORG) contribute nothing and only
+    * non-derivable commits (overwrites, RESTOREs, history gaps) pay a
+    * single-commit snapshot diff. A window MIXING DML with OPTIMIZE
+    * therefore stays O(changed files + masked rows), where the plain
+    * endpoint form of [[changes]] must fall back. Driver cost: one
+    * history read and O(window commits) manifest reads. */
+  def changesPerCommit(fromV: Long, toV: Long): DataFrame =
+    sharingHistory { _ =>
+      val slices = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      var spanStart = -1L
+      def flushSpan(endV: Long): Unit = if (spanStart >= 0) {
+        slices += changes(spanStart - 1, endV)
+        spanStart = -1L
       }
-      v -> cls
+      new CommitWindow(fromV, toV).kinds.foreach { case (v, k) =>
+        if (CommitKind.derivable(k)) { if (spanStart < 0) spanStart = v }
+        else {
+          flushSpan(v - 1)
+          if (k != CommitKind.Layout) slices += changes(v - 1, v)
+        }
+      }
+      flushSpan(toV)
+      slices.reduceOption(_ unionByName _).getOrElse(changes(toV, toV))
     }
-    // fold consecutive mergeable commits into one endpoint span
-    val slices = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var spanStart = -1L
-    def flushSpan(endV: Long): Unit = if (spanStart >= 0) {
-      slices += changes(spanStart - 1, endV)
-      spanStart = -1L
-    }
-    classes.foreach { case (v, cls) =>
-      cls match {
-        case 0 => if (spanStart < 0) spanStart = v
-        case 1 => flushSpan(v - 1) // layout: nothing to emit
-        case 2 => flushSpan(v - 1); slices += changes(v - 1, v)
+
+  /** A change feed WITH COMMIT METADATA (Delta CDF's `_commit_version`
+    * / `_commit_timestamp` columns — the fields downstream consumers
+    * key cursors, audits, and SCD2 effective-dates off): `feed(v - 1,
+    * v)` for each version v in (fromV, toV], stamped with v (a
+    * plan-time literal) and its M33 in-commit timestamp, and unioned.
+    * `feed` is any change-feed planner — [[changes]],
+    * [[changesWithUpdates]], or a [[streamChangeBatch]] closure —
+    * so each slice keeps that planner's O(changed files) cost. Slices
+    * align to the newest slice's columns, so a range crossing a schema
+    * evolution still unions. Fails loudly on a missing history line:
+    * a guessed timestamp would corrupt every cursor keyed on it. */
+  def withCommitMeta(fromV: Long, toV: Long)(
+      feed: (Long, Long) => DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    require(fromV >= -1 && fromV <= toV,
+      s"commit-meta range is invalid at $root: $fromV..$toV")
+    val slices = sharingHistory { hist =>
+      val tsByV = hist.filter(h => h.version > fromV && h.version <= toV)
+        .map(h => h.version -> java.sql.Timestamp.from(
+          java.time.Instant.parse(h.timestamp))).toMap
+      ((fromV + 1) to toV).map { v =>
+        require(tsByV.contains(v), s"no history line for version $v of " +
+          s"$root — cannot stamp _commit_timestamp")
+        feed(v - 1, v)
+          .withColumn("_commit_version", lit(v))
+          .withColumn("_commit_timestamp", lit(tsByV(v)))
       }
     }
-    flushSpan(toV)
-    if (slices.isEmpty) changes(toV, toV) // all-layout window: empty
-    else slices.reduce(_ unionByName _)
-  }
-
-  /** Commit timestamps (M33 monotone in-commit time) for versions in
-    * (fromV, toV] — one bounded history walk. Fails loudly on a
-    * missing line: stamping a guessed time would corrupt every
-    * downstream cursor keyed on it. */
-  private def commitTimestamps(fromV: Long, toV: Long)
-      : Map[Long, java.sql.Timestamp] = {
-    val byV = history(limit = Int.MaxValue)
-      .filter(h => h.version > fromV && h.version <= toV)
-      .map(h => h.version -> java.sql.Timestamp.from(
-        java.time.Instant.parse(h.timestamp))).toMap
-    ((fromV + 1) to toV).foreach(v => require(byV.contains(v),
-      s"no history line for version $v of $root — cannot stamp " +
-        "_commit_timestamp"))
-    byV
-  }
-
-  /** Change feed WITH COMMIT METADATA (Delta CDF's `_commit_version` /
-    * `_commit_timestamp` columns — the fields downstream consumers key
-    * cursors, audits, and SCD2 effective-dates off): [[changes]]
-    * computed per VERSION slice, each stamped with its version (a
-    * plan-time literal — the version is known per planned file set)
-    * and its M33 in-commit timestamp. Cost is the same O(changed
-    * files) as the endpoint diff: each slice plans only the files its
-    * version added/re-masked, and the version loop is driver-side
-    * manifest arithmetic. Slices align to `toV`'s logical schema, so
-    * a range crossing a schema evolution still unions. */
-  def changesWithMeta(fromV: Long, toV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    require(fromV <= toV,
-      s"changesWithMeta range is backwards: $fromV > $toV")
-    require(fromV >= -1, s"changesWithMeta fromV must be >= -1: $fromV")
-    val target = logicalSchema(readManifest(toV))
-    val tsByV = commitTimestamps(fromV, toV)
-    def align(df: DataFrame): DataFrame =
-      df.select(target.fields.toSeq.map { f =>
-        (if (df.columns.contains(f.name)) col(f.name)
-         else lit(null).cast(f.dataType)).as(f.name)
-      } ++ Seq(col("_change_type"), col("_commit_version"),
-        col("_commit_timestamp")): _*)
-    val empty = align(changes(toV, toV)
-      .withColumn("_commit_version", lit(null).cast("long"))
-      .withColumn("_commit_timestamp", lit(null).cast("timestamp")))
-      .limit(0)
-    ((fromV + 1) to toV).map { v =>
-      // fromV = -1 admits the CREATING commit: the v0 slice is the
-      // whole v0 snapshot as inserts (the empty-prelude diff)
-      val slice =
-        if (v == 0L) readVersion(0L)
-          .withColumn("_change_type", lit("insert"))
-        else changes(v - 1, v)
-      align(slice
-        .withColumn("_commit_version", lit(v))
-        .withColumn("_commit_timestamp", lit(tsByV(v))))
-    }.foldLeft(empty)(_ unionByName _)
-  }
-
-  /** [[changesWithUpdates]] with the commit-metadata columns — the
-    * row-tracked update-image feed, per-version sliced and stamped:
-    * each update pre/post pair (and insert/delete) carries the
-    * version and M33 commit time of the commit that produced it.
-    * Same O(changed files) planning per slice. */
-  def changesWithUpdatesMeta(fromV: Long, toV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    require(fromV <= toV,
-      s"changesWithUpdatesMeta range is backwards: $fromV > $toV")
-    val tsByV = commitTimestamps(fromV, toV)
-    val empty = changesWithUpdates(toV, toV)
-      .withColumn("_commit_version", lit(null).cast("long"))
-      .withColumn("_commit_timestamp", lit(null).cast("timestamp"))
-      .limit(0)
-    ((fromV + 1) to toV).map { v =>
-      changesWithUpdates(v - 1, v)
-        .withColumn("_commit_version", lit(v))
-        .withColumn("_commit_timestamp", lit(tsByV(v)))
-    }.foldLeft(empty)(_ unionByName _)
-  }
-
-  /** [[changesBetweenTimestamps]] with the commit-metadata columns —
-    * same endpoint resolution (start rounds FORWARD, end rounds
-    * BACK), the feed itself per-version stamped. */
-  def changesBetweenTimestampsWithMeta(fromTs: String,
-      toTs: String): DataFrame = {
-    val fromV = firstVersionAtOrAfter(fromTs).getOrElse(sys.error(
-      s"no commit of $root at or after $fromTs " +
-        s"(newest: ${history(limit = 1).headOption.map(_.timestamp)
-          .getOrElse("none")})"))
-    val toV = versionAtTimestamp(toTs)
-    require(fromV <= toV,
-      s"no commit of $root inside [$fromTs, $toTs]")
-    changesWithMeta(fromV - 1, toV)
-  }
-
-  /** [[streamChangeBatch]] with the commit-metadata columns: the
-    * range splits into per-version slices, each stamped with its
-    * version literal and M33 in-commit timestamp; the initial
-    * snapshot batch stamps the snapshot's own version (Delta's CDF
-    * streaming behavior). Same O(changed files) planning. */
-  def streamChangeBatchMeta(fromV: Option[Long], toV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    fromV match {
-      case None =>
-        val ts = commitTimestamps(toV - 1, toV)(toV)
-        streamChangeBatch(None, toV)
-          .withColumn("_commit_version", lit(toV))
-          .withColumn("_commit_timestamp", lit(ts))
-      case Some(f) =>
-        val tsByV = commitTimestamps(f, toV)
-        ((f + 1) to toV).map { v =>
-          streamChangeBatch(Some(v - 1), v)
-            .withColumn("_commit_version", lit(v))
-            .withColumn("_commit_timestamp", lit(tsByV(v)))
-        }.reduce(_ unionByName _)
+    slices.lastOption match {
+      case None => feed(toV, toV)
+        .withColumn("_commit_version", lit(null).cast("long"))
+        .withColumn("_commit_timestamp", lit(null).cast("timestamp"))
+        .limit(0)
+      case Some(newest) => slices.map(alignTo(_, newest.schema.fields.toSeq))
+        .reduce(_ unionByName _)
     }
+  }
+
+  /** One micro-batch of the streaming source
+    * ([[org.apache.spark.sql.graftbridge.VersionedStreamSource]] /
+    * `Streaming.versionedSource`): the full snapshot at `toV` when
+    * `fromV` is None (initial load), else exactly the files the range
+    * (fromV, toV] ADDED — a version of appends streams one version of
+    * files, never the table. A range that also REMOVED files or masked
+    * rows (overwrite / compaction / DELETE) breaks file-to-row identity
+    * and fails loudly unless `ignoreChanges` (then: added files only,
+    * at-least-once for rewritten rows). Frames are streaming-tagged
+    * for the MicroBatchExecution plan splice. */
+  def streamBatch(fromV: Option[Long], toV: Long,
+      ignoreChanges: Boolean): DataFrame = {
+    val w = new CommitWindow(fromV.getOrElse(-1L), toV)
+    val d = w.delta
+    if (!d.appendOnly && !ignoreChanges) sys.error(
+      s"versions ${w.fromV}..$toV of $root removed ${d.removed.size} " +
+        "file(s) " + (if (d.remasked.nonEmpty)
+          "and masked rows via deletion vectors " else "") +
+        "(overwrite/compaction/delete) — a streaming source needs " +
+        "append-only commits; set ignoreChanges=true to stream only " +
+        "added files (at-least-once for rewritten rows)")
+    readFiles(w.toM, d.added, isStreaming = true)
+  }
+
+  /** One micro-batch with PER-COMMIT delete/rewrite tolerance (Delta's
+    * `ignoreDeletes` / `skipChangeCommits` options — finer-grained
+    * than the all-or-nothing `ignoreChanges`):
+    *
+    *  - a commit that only ADDS files streams its added files, always;
+    *  - `ignoreDeletes`: a commit that only REMOVES files or only
+    *    extends DV masks (partition deletes, DV row deletes) is
+    *    admitted WITHOUT rows — deletes are tolerable without row
+    *    loss; a commit that both removes and adds (a rewrite:
+    *    UPDATE/MERGE/overwrite) still fails loudly, because silently
+    *    streaming its adds would double rewritten rows;
+    *  - `skipChangeCommits`: commits that change existing data
+    *    (remove files or extend masks) are skipped WHOLESALE — their
+    *    added files never stream either (Delta 2.4's semantics:
+    *    the stream is "new data only", rewrites are invisible).
+    *
+    * Classification is the window's per-commit manifest walk; admitted
+    * files are planned AS THEY APPEARED at their commit (their DV state
+    * then), so a file masked later in the range still streams its
+    * at-commit rows — the same at-least-once stance as `ignoreChanges`,
+    * and unlike [[streamBatch]]'s endpoint semantics. */
+  def streamBatchSelective(fromV: Option[Long], toV: Long,
+      ignoreDeletes: Boolean, skipChangeCommits: Boolean): DataFrame = {
+    val w = new CommitWindow(fromV.getOrElse(-1L), toV)
+    val entries =
+      if (fromV.isEmpty) w.toM.entries // initial snapshot batch
+      else w.commitDeltas.flatMap { case (v, d) =>
+        if (d.appendOnly) d.added
+        else if (skipChangeCommits) Seq.empty // rewrite: invisible
+        else if (ignoreDeletes && d.added.isEmpty) Seq.empty // pure delete
+        else sys.error(
+          s"version $v of $root is a rewrite commit (removed " +
+            s"${d.removed.size} file(s)" +
+            (if (d.remasked.nonEmpty) ", extended DV masks" else "") +
+            s", added ${d.added.size}) — ignoreDeletes only admits " +
+            "delete-only commits; use skipChangeCommits to skip " +
+            "rewrites wholesale, or ignoreChanges to stream their " +
+            "added files at-least-once")
+      }
+    readFiles(w.toM, entries, isStreaming = true)
   }
 
   // ------------------------------------------------------ column mapping
@@ -3580,21 +3332,18 @@ final class VersionedTable(spark: SparkSession, root: String) {
     if (at.isEmpty) None else Some(at.min)
   }
 
-  /** Change feed between two TIMESTAMPS (Delta CDF's
-    * `startingTimestamp`/`endingTimestamp` form): operators think in
-    * wall-clock instants ("what changed between 2 am and the page"),
-    * so both endpoints resolve through the commit history — the start
-    * rounds FORWARD to the first version committed at or after
-    * `fromTs` (that commit's changes are INCLUDED, Delta's inclusive
-    * contract), the end rounds BACK to the last version at or before
-    * `toTs`. Resolution is two bounded history walks; the feed itself
-    * is [[changes]] with all its fast paths (append-only file-level,
-    * O(changed files)). A start that resolves to the table's creating
-    * commit diffs against the empty prelude — the whole `toV` snapshot
-    * as inserts. Throws when no commit falls inside the window (the
-    * caller asked for changes in an interval where nothing happened —
-    * an empty feed would be indistinguishable from a wrong clock). */
-  def changesBetweenTimestamps(fromTs: String, toTs: String): DataFrame = {
+  /** A change-feed window between two TIMESTAMPS (Delta CDF's
+    * `startingTimestamp`/`endingTimestamp` form), as the (fromV, toV]
+    * bounds [[changes]] and [[withCommitMeta]] take: operators think
+    * in wall-clock instants ("what changed between 2 am and the
+    * page"), so the start rounds FORWARD to the first version
+    * committed at or after `fromTs` (that commit's changes are
+    * INCLUDED, Delta's inclusive contract) and the end rounds BACK to
+    * the last version at or before `toTs`. A start at the creating
+    * commit resolves to -1, the empty prelude. Two bounded history
+    * walks. Throws when no commit falls inside the window (an empty
+    * feed would be indistinguishable from a wrong clock). */
+  def versionsBetween(fromTs: String, toTs: String): (Long, Long) = {
     val fromV = firstVersionAtOrAfter(fromTs).getOrElse(sys.error(
       s"no commit of $root at or after $fromTs " +
         s"(newest: ${history(limit = 1).headOption.map(_.timestamp)
@@ -3603,11 +3352,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     require(fromV <= toV,
       s"no commits of $root inside [$fromTs, $toTs] " +
         s"(first at-or-after start: v$fromV; last at-or-before end: v$toV)")
-    if (fromV == 0) {
-      import org.apache.spark.sql.functions.lit
-      // diff against the empty prelude: everything at toV is an insert
-      readVersion(toV).withColumn("_change_type", lit("insert"))
-    } else changes(fromV - 1, toV)
+    (fromV - 1, toV)
   }
 
   private val genExprRe =
@@ -3846,8 +3591,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val phys = mappingOrIdentity(m).find(_._1 == column).map(_._2)
       .getOrElse(sys.error(s"no column $column at $root"))
     val dir = bloomDirFor(curV, column)
-    bloomFrame(m, m.entries, phys, fpp).write.mode(SaveMode.Overwrite)
-      .parquet(dir.toString)
+    writeCommitData(bloomFrame(m, m.entries, phys, fpp), Seq.empty, dir)
     writeFppMarker(dir, fpp)
   }
 
@@ -3945,7 +3689,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val out = old.join(broadcast(live), Seq("file_rel"), "left_semi")
       .unionByName(bloomFrame(m, missing, phys, fpp))
     val newDir = bloomDirFor(v, column)
-    out.write.mode(SaveMode.Overwrite).parquet(newDir.toString)
+    writeCommitData(out, Seq.empty, newDir)
     writeFppMarker(newDir, fpp)
   }
 
@@ -4400,10 +4144,11 @@ final class VersionedTable(spark: SparkSession, root: String) {
 
   // ------------------------------------------------------------ internals
 
-  /** The one place commit data hits parquet. Spark still DEFAULTS
-    * timestamp output to INT96 (Hive compat), whose footers carry NO
-    * statistics — every timestamp column would be unprunable and
-    * [[readWhereTimestamp]] dead on arrival. When the session sits on
+  /** The one place commit data and sidecars (DV masks, bloom indexes)
+    * hit parquet. Spark still DEFAULTS timestamp output to INT96 (Hive
+    * compat), whose footers carry NO statistics — every timestamp
+    * column would be unprunable and [[readWhereTimestamp]] dead on
+    * arrival. When the session sits on
     * that default, commits write TIMESTAMP_MICROS instead (the form
     * whose Long stats the manifest scrape records); a session that
     * explicitly chose MILLIS/MICROS is left alone. */
@@ -4412,32 +4157,20 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val key = "spark.sql.parquet.outputTimestampType"
     val prev = spark.conf.get(key, "INT96")
     if (prev == "INT96") spark.conf.set(key, "TIMESTAMP_MICROS")
-    // Commit-protocol scope (restored below, engine commits only):
-    // readers are gated by the MANIFEST, never by directory state, and
-    // every attempt dir is writer-unique — so the v1 committer's
-    // driver-side rename pass over _temporary (plus its _SUCCESS
-    // marker file) buys nothing here. v2 renames in the tasks;
-    // a failed attempt's leftovers live in an attempt dir no manifest
-    // ever references. Driver stack sampling (round 18, post-fork-fix)
-    // put the v1 rename pass at ~half of writeCommitData's driver time
-    // on commit-heavy scenarios.
-    val algoKey =
-      "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version"
-    val succKey =
-      "spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs"
-    val prevAlgo = spark.conf.getOption(algoKey)
-    val prevSucc = spark.conf.getOption(succKey)
-    spark.conf.set(algoKey, "2")
-    spark.conf.set(succKey, "false")
     try {
+      // Commit protocol, as per-write options (they reach the job's
+      // Hadoop conf; runtime `spark.hadoop.*` session keys do not):
+      // readers are gated by the MANIFEST, never by directory state,
+      // and every attempt dir is writer-unique — so the v1 committer's
+      // driver-side rename pass over _temporary and its _SUCCESS
+      // marker buy nothing here. v2 renames in the tasks; a failed
+      // attempt's leftovers live in a dir no manifest references.
       val writer = df.write.mode(SaveMode.Overwrite)
+        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
         .parquet(dir.toString)
-    } finally {
-      if (prev == "INT96") spark.conf.set(key, prev)
-      prevAlgo.fold(spark.conf.unset(algoKey))(spark.conf.set(algoKey, _))
-      prevSucc.fold(spark.conf.unset(succKey))(spark.conf.set(succKey, _))
-    }
+    } finally if (prev == "INT96") spark.conf.set(key, prev)
   }
 
   /** Table-root-relative path. Both sides are qualified through the
@@ -4961,10 +4694,13 @@ final class VersionedTable(spark: SparkSession, root: String) {
         val tmpNio = java.nio.file.Paths.get(tmp.toUri.getPath)
         java.nio.file.Files.write(tmpNio,
           v.toString.getBytes(StandardCharsets.UTF_8))
-        java.nio.file.Files.move(tmpNio,
-          java.nio.file.Paths.get(latestPath.toUri.getPath),
+        val latestNio = java.nio.file.Paths.get(latestPath.toUri.getPath)
+        java.nio.file.Files.move(tmpNio, latestNio,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        // a checksum a Hadoop-API writer left would no longer match
+        java.nio.file.Files.deleteIfExists(
+          latestNio.resolveSibling("._latest.crc"))
       } else {
         val out = fs.create(tmp, true)
         try out.write(v.toString.getBytes(StandardCharsets.UTF_8))
@@ -5120,6 +4856,79 @@ object VersionedTable {
     val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
       new java.io.ByteArrayInputStream(bytes))
     hs.exists(bf.mightContainLong)
+  }
+
+  /** The file-level difference between two manifests' entries: files
+    * `to` added, files it removed (as `from` had them), and surviving
+    * files whose deletion mask changed, each as (to, from) entries. */
+  private[io] final case class ManifestDelta(added: Seq[ManifestEntry],
+      removed: Seq[ManifestEntry],
+      remasked: Seq[(ManifestEntry, ManifestEntry)]) {
+    /** Re-masked files whose mask SHRANK — rows came back to life. */
+    def shrunk: Seq[ManifestEntry] =
+      remasked.collect { case (e, o) if e.dvRows < o.dvRows => e }
+    def appendOnly: Boolean = removed.isEmpty && remasked.isEmpty
+  }
+
+  private[io] object ManifestDelta {
+    def between(from: Seq[ManifestEntry],
+        to: Seq[ManifestEntry]): ManifestDelta = {
+      val fromByPath = from.map(e => e.relPath -> e).toMap
+      val toPaths = to.map(_.relPath).toSet
+      ManifestDelta(
+        to.filterNot(e => fromByPath.contains(e.relPath)),
+        from.filterNot(e => toPaths.contains(e.relPath)),
+        to.flatMap(e => fromByPath.get(e.relPath)
+          .filter(o => o.dvDir != e.dvDir || o.dvRows != e.dvRows)
+          .map(e -> _)))
+    }
+  }
+
+  /** What one commit did, as the change feed sees it. */
+  private[io] sealed trait CommitKind
+  private[io] object CommitKind {
+    /** Removed no file: appends and metadata-only commits. */
+    case object Append extends CommitKind
+    /** Deletion-vector DELETE / UPDATE / MERGE: masks only grow, and a
+      * file leaves the manifest only when its mask covers every row
+      * (a DV death), so its prior live rows are exactly the deletes. */
+    case object DvDml extends CommitKind
+    /** DELETE / TRUNCATE that removed files and added none: every
+      * removed row died (a delete that rewrote survivors adds files). */
+    case object PureRemoval extends CommitKind
+    /** OPTIMIZE / REORG PURGE: moves bytes, never rows. */
+    case object Layout extends CommitKind
+    /** RESTORE: masks may shrink and removed files come back. */
+    case object Restore extends CommitKind
+    /** Any other removal or mask shrink (overwrite, copy-on-write). */
+    case object Other extends CommitKind
+    /** No history line: nothing about the commit can be proved. */
+    case object Gap extends CommitKind
+
+    /** Kinds whose row changes a manifest delta derives exactly. */
+    val derivable: Set[CommitKind] = Set(Append, DvDml, PureRemoval)
+
+    /** The kind a commit's history line alone decides, if any. */
+    def byOperation(op: Option[String]): Option[CommitKind] = op match {
+      case None => Some(Gap)
+      case Some(o) if o.startsWith("RESTORE") => Some(Restore)
+      case Some(o) if o.startsWith("OPTIMIZE") || o == "REORG PURGE" =>
+        Some(Layout)
+      case _ => None
+    }
+
+    /** A commit's kind from its history line and its own file delta. */
+    def apply(op: Option[String], d: ManifestDelta): CommitKind =
+      byOperation(op).getOrElse {
+        val o = op.get
+        if (d.shrunk.nonEmpty) Other
+        else if (Seq("DELETE DV", "UPDATE DV", "MERGE DV")
+            .exists(o.startsWith)) DvDml
+        else if (d.removed.isEmpty) Append
+        else if ((o == "TRUNCATE" || o.toUpperCase.startsWith("DELETE")) &&
+            d.added.isEmpty) PureRemoval
+        else Other
+      }
   }
 }
 

@@ -507,7 +507,7 @@ object Analytics {
     // partitioning): the cloned query session keeps the sizing, the
     // caller's session reverts
     val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(srcDir)) {
+      graft.streaming.Streaming.dirBytes(spark, srcDir)) {
       agg.writeStream.format("memory").queryName(mem)
         .outputMode("complete").trigger(Trigger.AvailableNow()).start()
     }
@@ -548,7 +548,7 @@ object Analytics {
     val mem = "q197_stream_dedup"
     spark.catalog.dropTempView(mem)
     val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(srcDir)) {
+      graft.streaming.Streaming.dirBytes(spark, srcDir)) {
       deduped.writeStream.format("memory").queryName(mem)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
     }
@@ -587,7 +587,7 @@ object Analytics {
     val mem = "q198_stream_static"
     spark.catalog.dropTempView(mem)
     val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(srcDir)) {
+      graft.streaming.Streaming.dirBytes(spark, srcDir)) {
       agg.writeStream.format("memory").queryName(mem)
         .outputMode("complete").trigger(Trigger.AvailableNow()).start()
     }
@@ -766,7 +766,7 @@ object Analytics {
     val mem = "q158_stream_sess"
     spark.catalog.dropTempView(mem)
     val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(srcDir)) {
+      graft.streaming.Streaming.dirBytes(spark, srcDir)) {
       sessions.writeStream.format("memory").queryName(mem)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
     }
@@ -960,7 +960,7 @@ object Analytics {
     // stream join keeps FOUR stores per partition, each committing a
     // checkpoint delta per batch — measured 6.9s → 2.8s at sf0.1
     val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(srcDir)) {
+      graft.streaming.Streaming.dirBytes(spark, srcDir)) {
       joined.writeStream.format("memory").queryName(mem)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
     }
@@ -1010,7 +1010,7 @@ object Analytics {
     val mem = "q218_stream_semi"
     spark.catalog.dropTempView(mem)
     val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(srcDir)) {
+      graft.streaming.Streaming.dirBytes(spark, srcDir)) {
       joined.writeStream.format("memory").queryName(mem)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
     }
@@ -1050,7 +1050,7 @@ object Analytics {
       .localCheckpoint()
     def drain(): Unit = {
       val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(root)) {
+      graft.streaming.Streaming.dirBytes(spark, root)) {
       graft.streaming.Streaming.changeFeedSource(spark, root)
           .writeStream
           .option("checkpointLocation", s"$base0/ckpt")
@@ -1111,7 +1111,7 @@ object Analytics {
     }
     def drain(): Unit = {
       val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(feedRoot)) {
+      graft.streaming.Streaming.dirBytes(spark, feedRoot)) {
       graft.streaming.Streaming.changeFeedSource(spark, feedRoot)
           .writeStream
           .option("checkpointLocation", s"$base0/ckpt")
@@ -1178,7 +1178,7 @@ object Analytics {
     }
     def drain(): Unit = {
       val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(feedRoot)) {
+      graft.streaming.Streaming.dirBytes(spark, feedRoot)) {
       graft.streaming.Streaming.changeFeedSource(spark, feedRoot)
           .writeStream
           .option("checkpointLocation", s"$base0/ckpt")
@@ -1237,7 +1237,7 @@ object Analytics {
     }
     def drain(): Unit = {
       val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(feedRoot)) {
+      graft.streaming.Streaming.dirBytes(spark, feedRoot)) {
       graft.streaming.Streaming.changeFeedSource(spark, feedRoot)
           .writeStream
           .option("checkpointLocation", s"$base0/ckpt")
@@ -1297,7 +1297,7 @@ object Analytics {
     def drain(root: String, sink: String, ckpt: String,
         skipChanges: Boolean, ignoreDel: Boolean): Unit = {
       val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(root)) {
+      graft.streaming.Streaming.dirBytes(spark, root)) {
       graft.streaming.Streaming.versionedSource(spark, root,
             skipChangeCommits = skipChanges, ignoreDeletes = ignoreDel)
           .writeStream.option("checkpointLocation", ckpt)
@@ -1384,7 +1384,7 @@ object Analytics {
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("micro")).as("sum_micro"))
     val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(feedRoot)) {
+      graft.streaming.Streaming.dirBytes(spark, feedRoot)) {
       agg.writeStream
         .outputMode(OutputMode.Update)
         .option("checkpointLocation", s"$base/ckpt")
@@ -1443,7 +1443,7 @@ object Analytics {
     val mv = new graft.io.VersionedTable(spark, mvRoot)
     mv.write(IncrementalAgg.compute(base.read().limit(0), keys, sums))
     val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(baseRoot)) {
+      graft.streaming.Streaming.dirBytes(spark, baseRoot)) {
       graft.streaming.Streaming.changeFeedSource(spark, baseRoot)
         .writeStream
         .option("checkpointLocation", s"$root/ckpt")
@@ -1503,7 +1503,7 @@ object Analytics {
       fact.read().limit(0).join(dim.read().limit(0),
         col("o_custkey") === col("c_custkey")), keys, sums))
     val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(factRoot)) {
+      graft.streaming.Streaming.dirBytes(spark, factRoot)) {
       graft.streaming.Streaming.changeFeedSource(spark, factRoot)
         .writeStream
         .option("checkpointLocation", s"$root/ckpt")
@@ -1554,7 +1554,7 @@ object Analytics {
       .versionedAppendBatch(quarRoot, "exp-quarantine")
     val expectation = col("cents") > 0L && col("cents") < 30000000L
     val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(feedRoot)) {
+      graft.streaming.Streaming.dirBytes(spark, feedRoot)) {
       graft.streaming.Streaming.versionedSource(spark, feedRoot)
         .writeStream
         .option("checkpointLocation", s"$base/ckpt")
@@ -1616,7 +1616,7 @@ object Analytics {
       org.apache.spark.sql.SaveMode.Append) // v2 — beyond the bound
     val out = s"$base/out"
     val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(root)) {
+      graft.streaming.Streaming.dirBytes(spark, root)) {
       graft.streaming.Streaming
         .versionedSource(spark, root, endingVersion = Some(1L))
         .writeStream.format("parquet").option("path", out)
@@ -1733,7 +1733,7 @@ object Analytics {
     val mem = "q183_stream_outer"
     spark.catalog.dropTempView(mem)
     val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(srcDir)) {
+      graft.streaming.Streaming.dirBytes(spark, srcDir)) {
       joined.writeStream.format("memory").queryName(mem)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
     }
@@ -1783,7 +1783,7 @@ object Analytics {
     val mem = "q202_stream_full_outer"
     spark.catalog.dropTempView(mem)
     val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(srcDir)) {
+      graft.streaming.Streaming.dirBytes(spark, srcDir)) {
       joined.writeStream.format("memory").queryName(mem)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
     }
@@ -1824,7 +1824,7 @@ object Analytics {
     val out = s"$base0/out"
     def drain(): Unit = {
       val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(root)) {
+      graft.streaming.Streaming.dirBytes(spark, root)) {
       graft.streaming.Streaming.changeFeedSource(spark, root)
           .writeStream.format("parquet").option("path", out)
           .option("checkpointLocation", s"$base0/ckpt")
@@ -1847,7 +1847,7 @@ object Analytics {
 
   /** TIMESTAMP-SUBSCRIBED CHANGE FEED, streaming + batch (q210;
     * `startingTimestamp` on [[graft.streaming.Streaming.changeFeedSource]]
-    * and [[graft.io.VersionedTable.changesBetweenTimestamps]] — Delta's
+    * and [[graft.io.VersionedTable.versionsBetween]] — Delta's
     * timestamp forms of the same options): operators think in
     * wall-clock instants, so both APIs resolve instants through the
     * commit history — the start rounds FORWARD to the first commit at
@@ -1884,7 +1884,7 @@ object Analytics {
     val out = s"$base0/out"
     def drain(): Unit = {
       val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(root)) {
+      graft.streaming.Streaming.dirBytes(spark, root)) {
       graft.streaming.Streaming.changeFeedSource(spark, root,
             startingTimestamp = Some(ts1))
           .writeStream.format("parquet").option("path", out)
@@ -1901,7 +1901,8 @@ object Analytics {
     val streamed = spark.read.parquet(out)
       .select(lit("stream").as("channel"), col("o_orderkey"),
         col("o_totalprice"), col("_change_type"))
-    val batch = vt.changesBetweenTimestamps(ts1, ts2)
+    val (fromV, toV) = vt.versionsBetween(ts1, ts2)
+    val batch = vt.changes(fromV, toV)
       .select(lit("batch").as("channel"), col("o_orderkey"),
         col("o_totalprice"), col("_change_type"))
     streamed.unionByName(batch)

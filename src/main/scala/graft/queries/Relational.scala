@@ -553,7 +553,7 @@ object Relational {
   }
 
   /** CDF COMMIT METADATA (q243; Delta CDF `_commit_version` /
-    * `_commit_timestamp`, [[graft.io.VersionedTable.changesWithMeta]]):
+    * `_commit_timestamp`, [[graft.io.VersionedTable.withCommitMeta]]):
     * the change feed per VERSION slice, each row stamped with the
     * version that produced it — the columns downstream consumers key
     * cursors, audits, and SCD2 effective-dates off. v0 creates (keys
@@ -580,7 +580,7 @@ object Relational {
       .select(col("o_orderkey"), cents.as("cents")),
       org.apache.spark.sql.SaveMode.Append) // v1
     vt.deleteVectorized("o_orderkey", 1000, 2000) // v2
-    vt.changesWithMeta(0L, 2L)
+    vt.withCommitMeta(0L, 2L)(vt.changes)
       .select(col("o_orderkey"), col("cents"), col("_change_type"),
         col("_commit_version"),
         col("_commit_timestamp").isNotNull.as("has_ts"))

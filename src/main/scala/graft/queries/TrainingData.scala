@@ -3148,7 +3148,7 @@ object TrainingData {
     val sink = graft.streaming.Streaming
       .versionedAppendBatch(outRoot, "decon-clean")
     val q = graft.streaming.Streaming.withStatePartitions(spark,
-      graft.streaming.Streaming.dirBytes(feedRoot)) {
+      graft.streaming.Streaming.dirBytes(spark, feedRoot)) {
       graft.streaming.Streaming.versionedSource(spark, feedRoot)
         .withColumn("fp", TextAnalysis.fingerprint64(col("text")))
         .join(broadcast(bench), Seq("fp"), "left_anti")

@@ -155,7 +155,8 @@ object GraftSql {
             .getOrElse(vt.currentVersion.getOrElse(sys.error(
               s"table $root does not exist")))
           val view = s"${name}__changes_${from}_$to"
-          vt.changesWithMeta(from - 1, to).createOrReplaceTempView(view)
+          vt.withCommitMeta(from - 1, to)(vt.changes)
+            .createOrReplaceTempView(view)
           view
         })
         // timestamp form: table_changes('t', 'fromTs'[, 'toTs']) — the
@@ -171,11 +172,12 @@ object GraftSql {
               .replaceAll("[^0-9]", "")
           val feed = Option(m.group(2)) match {
             case Some(toTs) =>
-              vt.changesBetweenTimestampsWithMeta(fromTs, toTs)
+              val (fromV, toV) = vt.versionsBetween(fromTs, toTs)
+              vt.withCommitMeta(fromV, toV)(vt.changes)
             case None =>
               val fromV = vt.firstVersionAtOrAfter(fromTs).getOrElse(
                 sys.error(s"no commit of $root at or after $fromTs"))
-              vt.changesWithMeta(fromV - 1, vt.currentVersion.get)
+              vt.withCommitMeta(fromV - 1, vt.currentVersion.get)(vt.changes)
           }
           feed.createOrReplaceTempView(view)
           view

@@ -51,19 +51,20 @@ object Streaming {
   /** Byte size of the source at `path` — the driver-side probe
     * [[adaptiveStatePartitions]] clamps on. Local paths sum
     * recursively; anything else (an `hdfs://`/`s3a://` URI, a
-    * vanished dir) resolves through its Hadoop FileSystem, and a
-    * probe that fails returns UNKNOWN (-1) so the partition sizing
-    * fails OPEN to the session's parallelism instead of closed to
-    * one state partition. */
-  def dirBytes(path: String): Long = {
+    * vanished dir) resolves through its Hadoop FileSystem under the
+    * session's Hadoop conf (where remote schemes and credentials are
+    * registered), and a probe that fails returns UNKNOWN (-1) so the
+    * partition sizing fails OPEN to the session's parallelism instead
+    * of closed to one state partition. */
+  def dirBytes(spark: SparkSession, path: String): Long = {
     val f = new java.io.File(path)
     if (f.isFile) f.length()
     else Option(f.listFiles()) match {
-      case Some(children) => children.map(c => dirBytes(c.getPath)).sum
+      case Some(children) => children.map(c => dirBytes(spark, c.getPath)).sum
       case None =>
         try {
           val p = new org.apache.hadoop.fs.Path(path)
-          p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+          p.getFileSystem(spark.sparkContext.hadoopConfiguration)
             .getContentSummary(p).getLength
         } catch { case scala.util.control.NonFatal(_) => -1L }
     }

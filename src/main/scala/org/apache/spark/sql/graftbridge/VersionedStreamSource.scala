@@ -209,13 +209,19 @@ final class VersionedStreamSource(spark: SparkSession, path: String,
     * bootstrapped out of band). */
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     val from = start.map(version).orElse(effectiveStartingVersion.map(_ - 1))
-    if (changeFeed && changeFeedMeta)
-      vt.streamChangeBatchMeta(from, version(end))
-    else if (changeFeed) vt.streamChangeBatch(from, version(end))
+    val to = version(end)
+    if (changeFeed && changeFeedMeta) from match {
+      // the snapshot batch stamps the snapshot's own version (Delta's
+      // CDF streaming behavior); later batches stamp per version
+      case None =>
+        vt.withCommitMeta(to - 1, to)((_, v) => vt.streamChangeBatch(None, v))
+      case Some(f) =>
+        vt.withCommitMeta(f, to)((a, b) => vt.streamChangeBatch(Some(a), b))
+    }
+    else if (changeFeed) vt.streamChangeBatch(from, to)
     else if (ignoreDeletes || skipChangeCommits)
-      vt.streamBatchSelective(from, version(end), ignoreDeletes,
-        skipChangeCommits)
-    else vt.streamBatch(from, version(end), ignoreChanges)
+      vt.streamBatchSelective(from, to, ignoreDeletes, skipChangeCommits)
+    else vt.streamBatch(from, to, ignoreChanges)
   }
 
   override def stop(): Unit = ()

@@ -214,6 +214,40 @@ class ChangeFeedPlanSpec extends AnyFunSuite {
           assert(state === snap,
             s"trial $trial: replayed state diverged at v$v")
         }
+        // the same script through the other per-commit surfaces: the
+        // changesPerCommit spans fold to the head snapshot, and the
+        // withCommitMeta slices, grouped by _commit_version, rebuild
+        // every snapshot
+        type Bag = Map[(Long, String), Long]
+        def snapshotAt(v: Long): Bag =
+          vt.readVersion(v).as[(Long, String)].collect().groupBy(identity)
+            .map { case (r, rs) => r -> rs.length.toLong }
+        def fold(from: Bag, rows: Seq[(Long, String, String)]): Bag =
+          rows.foldLeft(from) { case (acc, (id, s, t)) =>
+            val sign = t match {
+              case "insert" => 1L
+              case "delete" => -1L
+              case other => fail(s"unexpected change type: $other")
+            }
+            val n = acc.getOrElse((id, s), 0L) + sign
+            if (n == 0L) acc - ((id, s)) else acc.updated((id, s), n)
+          }
+        val perCommit = vt.changesPerCommit(0L, head)
+          .select("id", "s", "_change_type").as[(Long, String, String)]
+          .collect().toSeq
+        assert(fold(snapshotAt(0L), perCommit) === snapshotAt(head),
+          s"trial $trial: changesPerCommit replay diverged at v$head")
+        val byVersion = vt.withCommitMeta(0L, head)(vt.changes)
+          .select("id", "s", "_change_type", "_commit_version")
+          .as[(Long, String, String, Long)].collect().toSeq
+          .groupBy(_._4)
+        (1L to head).foldLeft(snapshotAt(0L)) { (bag, v) =>
+          val next = fold(bag, byVersion.getOrElse(v, Seq.empty)
+            .map(r => (r._1, r._2, r._3)))
+          assert(next === snapshotAt(v),
+            s"trial $trial: withCommitMeta replay diverged at v$v")
+          next
+        }
       }
     } finally spark.conf.unset("graft.dv.maxChainLinks")
   }

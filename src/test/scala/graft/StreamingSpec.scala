@@ -385,6 +385,35 @@ class StreamingSpec extends AnyFunSuite {
     intercept[Exception](drain())
   }
 
+  test("changeFeedSource: a window whose DV delete EMPTIES a file (a DV " +
+    "death under the chain cap) streams the same rows as batch changes") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.io.VersionedTable
+    import graft.streaming.Streaming
+    import spark.implicits._
+    val base = Fixtures.tempDir("graft-cdf-death")
+    val root = s"$base/tbl"
+    val vt = new VersionedTable(spark, root)
+    // two files split by id range: F holds [0,100), G holds [100,200)
+    vt.write((0L until 200L).map(i => (i, s"v$i")).toDF("id", "s")
+      .repartitionByRange(2, col("id"))) // v0
+    vt.deleteVectorized("id", 0, 4) // v1: partial mask on F
+    vt.deleteVectorized("id", 5, 99) // v2: F fully dead -> dropped
+    assert(vt.manifestEntries(2L).size == 1, "F must be dropped at v2")
+    val q = Streaming.changeFeedSource(spark, root, startingVersion = Some(1L))
+      .writeStream.format("parquet").option("path", s"$base/out")
+      .option("checkpointLocation", s"$base/ckpt")
+      .trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "s", "_change_type").as[(Long, String, String)]
+        .collect().toSeq.sorted
+    val streamed = rows(spark.read.parquet(s"$base/out"))
+    assert(streamed === rows(vt.changes(0L, 2L)))
+    assert(streamed === (0L to 99L).map(i => (i, s"v$i", "delete")))
+  }
+
   test("intervalJoinLeftOuter: unmatched rows emit ONLY after the " +
     "watermark passes their join horizon") {
     import org.apache.spark.sql.functions._
@@ -764,7 +793,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = spark.read.parquet(out)
       .select("id", "s", "_change_type").collect()
       .map(_.mkString("|")).sorted.toSeq
-    val batch = vt.changesBetweenTimestamps(ts(1L), ts(1L))
+    val batch = (vt.changes _).tupled(vt.versionsBetween(ts(1L), ts(1L)))
       .select("id", "s", "_change_type").collect()
       .map(_.mkString("|")).sorted.toSeq
     assert(streamed === batch)
@@ -1084,19 +1113,33 @@ class StreamingSpec extends AnyFunSuite {
     assert(vt.read().count() === 202L)
   }
 
+  test("dirBytes sizes a path through the session's Hadoop conf") {
+    import graft.streaming.Streaming
+    // the scheme is registered in this session's conf only: a probe
+    // through a fresh Configuration cannot resolve it and reads -1
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.fixedsize.impl", classOf[FixedSizeFs].getName)
+    conf.setBoolean("fs.fixedsize.impl.disable.cache", true)
+    try assert(Streaming.dirBytes(spark, "fixedsize:///feed") === 4242L)
+    finally {
+      conf.unset("fs.fixedsize.impl")
+      conf.unset("fs.fixedsize.impl.disable.cache")
+    }
+  }
+
   test("adaptiveStatePartitions: unmeasurable source fails OPEN to the cap") {
     import graft.streaming.Streaming
     val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // a bogus/non-local path must never size the drain at 1 state
     // partition — unknown size (-1) takes the session's parallelism
-    val bogus = Streaming.dirBytes("/definitely/not/a/real/dir/xyzzy")
+    val bogus = Streaming.dirBytes(spark, "/definitely/not/a/real/dir/xyzzy")
     assert(bogus === -1L, "unreadable path must report UNKNOWN, not 0")
     assert(Streaming.adaptiveStatePartitions(spark, bogus) === cap)
     // measurable sources still derive from bytes: tiny → 1
     val tiny = Fixtures.tempDir("graft-adapt")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(tiny, "f.bin"), Array.fill(128)(1.toByte))
-    assert(Streaming.dirBytes(tiny) === 128L)
+    assert(Streaming.dirBytes(spark, tiny) === 128L)
     assert(Streaming.adaptiveStatePartitions(spark, 128L) === 1)
     // and a 100 TB source saturates the cap
     assert(Streaming.adaptiveStatePartitions(spark, 100L << 40) === cap)
@@ -1106,4 +1149,29 @@ class StreamingSpec extends AnyFunSuite {
     finally spark.conf.unset("spark.graft.stream.statePartitions")
   }
 
+}
+
+/** A file system only a session's Hadoop conf knows: every path is a
+  * 4,242-byte file, nothing can be written. */
+final class FixedSizeFs extends org.apache.hadoop.fs.FileSystem {
+  import org.apache.hadoop.fs.{FileStatus, FSDataInputStream,
+    FSDataOutputStream, Path}
+  import org.apache.hadoop.fs.permission.FsPermission
+  import org.apache.hadoop.util.Progressable
+  private def readOnly = throw new UnsupportedOperationException("read-only")
+  override def getUri: java.net.URI = java.net.URI.create("fixedsize:///")
+  override def getFileStatus(p: Path): FileStatus =
+    new FileStatus(4242L, false, 1, 4242L, 0L, p)
+  override def listStatus(p: Path): Array[FileStatus] = Array(getFileStatus(p))
+  override def open(p: Path, bufferSize: Int): FSDataInputStream = readOnly
+  override def create(p: Path, perm: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = readOnly
+  override def append(p: Path, bufferSize: Int,
+      progress: Progressable): FSDataOutputStream = readOnly
+  override def rename(src: Path, dst: Path): Boolean = readOnly
+  override def delete(p: Path, recursive: Boolean): Boolean = readOnly
+  override def mkdirs(p: Path, perm: FsPermission): Boolean = readOnly
+  override def setWorkingDirectory(p: Path): Unit = ()
+  override def getWorkingDirectory: Path = new Path("fixedsize:///")
 }

@@ -41,21 +41,21 @@ class TimestampCdfSpec extends AnyFunSuite {
   test("changesBetweenTimestamps: inclusive start, append fast path") {
     val (vt, ts) = fixture
     // [t(v1), t(v2)]: v1 and v2's appends, file-level inserts only
-    val rows = vt.changesBetweenTimestamps(ts(1L), ts(2L))
+    val rows = (vt.changes _).tupled(vt.versionsBetween(ts(1L), ts(2L)))
       .collect().map(r => (r.getLong(0), r.getString(2))).sorted.toSeq
     assert(rows === Seq((3L, "insert"), (4L, "insert")))
   }
 
   test("a start at the creating commit diffs the empty prelude") {
     val (vt, ts) = fixture
-    val rows = vt.changesBetweenTimestamps(ts(0L), ts(1L))
+    val rows = (vt.changes _).tupled(vt.versionsBetween(ts(0L), ts(1L)))
       .collect().map(r => (r.getLong(0), r.getString(2))).sorted.toSeq
     assert(rows === Seq((1L, "insert"), (2L, "insert"), (3L, "insert")))
   }
 
   test("a window crossing a delete emits the removed rows") {
     val (vt, ts) = fixture
-    val rows = vt.changesBetweenTimestamps(ts(3L), ts(3L))
+    val rows = (vt.changes _).tupled(vt.versionsBetween(ts(3L), ts(3L)))
       .collect().map(r => (r.getLong(0), r.getString(2))).sorted.toSeq
     assert(rows === Seq((1L, "delete")))
   }
@@ -83,12 +83,11 @@ class TimestampCdfSpec extends AnyFunSuite {
     val (vt, ts) = fixture
     // nothing committed at or after the start
     intercept[RuntimeException] {
-      vt.changesBetweenTimestamps(plusSecs(ts(3L), 3600),
-        plusSecs(ts(3L), 7200))
+      vt.versionsBetween(plusSecs(ts(3L), 3600), plusSecs(ts(3L), 7200))
     }
     // start resolves past the end: empty commit window
     intercept[IllegalArgumentException] {
-      vt.changesBetweenTimestamps(ts(2L), ts(1L))
+      vt.versionsBetween(ts(2L), ts(1L))
     }
   }
 }
